@@ -128,6 +128,36 @@ def test_live_crawl_visit_set_and_depths(spark, server):
     assert hop["status"] == 200
 
 
+def test_fetch_one_unparseable_response_is_error():
+    """A response http.client cannot parse is a fetch error (status NULL,
+    the error channel), like a refused connection — not an exception that
+    fails the wave or the live robots.txt fetch."""
+    import socket
+
+    from wcm_spark.sources.httpfetch import _fetch_one
+
+    srv = socket.create_server(("127.0.0.1", 0))
+
+    def serve():
+        conn, _ = srv.accept()
+        with conn:
+            conn.recv(4096)
+            conn.sendall(b"garbage\r\n\r\n")
+
+    t = threading.Thread(target=serve, daemon=True)
+    t.start()
+    try:
+        got = _fetch_one(
+            f"http://127.0.0.1:{srv.getsockname()[1]}/robots.txt",
+            None, None, 5, 5.0, "wcm-spark", 1 << 20,
+        )
+    finally:
+        t.join(timeout=5)
+        srv.close()
+    assert not t.is_alive()
+    assert got[2] is None
+
+
 def test_live_crawl_error_channel(spark):
     """Unreachable host -> status NULL -> retry channel requeues it."""
     from wcm_spark.scheduler import Crawler, CrawlConfig

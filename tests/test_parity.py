@@ -125,6 +125,60 @@ def test_politeness_budget_restricts_waves(spark, corpus_small):
     assert all(r["count"] <= 4 for r in wave_sizes)
 
 
+def test_bloom_path_crossover_parity(spark, corpus_small, sim_result, monkeypatch):
+    """With no exact seen mirror (broadcast_seen_max=0), waves whose seen
+    set is at most dedup.ANTI_JOIN_BROADCAST_MAX take the broadcast
+    anti-join and build no bloom. The first wave past it builds the bloom
+    from seen and probes it through bloom_prefilter; each bloom wave then
+    folds its fresh digests in. The threshold is lowered so this small
+    crawl crosses over mid-way; visit order and seen set must not move."""
+    from wcm_spark import scheduler
+    from wcm_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "ANTI_JOIN_BROADCAST_MAX", 5)
+    calls = {"build": 0, "prefilter": 0}
+    real_build, real_prefilter = scheduler.build_bloom, dedup.bloom_prefilter
+
+    def build(*a, **kw):
+        calls["build"] += 1
+        return real_build(*a, **kw)
+
+    def prefilter(*a, **kw):
+        calls["prefilter"] += 1
+        return real_prefilter(*a, **kw)
+
+    monkeypatch.setattr(scheduler, "build_bloom", build)
+    monkeypatch.setattr(dedup, "bloom_prefilter", prefilter)
+    corpus_df = spark.createDataFrame(
+        [
+            (r["url"], r["status"], r["content_type"], r["content_length"],
+             r["body"], r["redirect_to"])
+            for r in corpus_small
+        ],
+        "url string, status int, content_type string, content_length bigint, "
+        "body binary, redirect_to string",
+    )
+    cfg = CrawlConfig(expected_urls=10_000, broadcast_seen_max=0)
+    res = Crawler(spark, corpus_df, cfg).run(seed_urls(N_SITES))
+
+    got = [
+        r["url"]
+        for r in res.visits.filter("status is not null").orderBy("pos").collect()
+    ]
+    assert got == sim_result.visit_order
+    assert {r["digest"] for r in res.seen.collect()} == sim_result.seen
+    # replay the seen-count each wave starts from
+    next_seq, bloom_waves, folds = N_SITES, 0, 0
+    for m in res.metrics:
+        if next_seq > 5:
+            bloom_waves += 1
+            folds += m["enqueued"] > 0
+        next_seq += m["enqueued"]
+    assert 0 < bloom_waves < len(res.metrics)  # crossed over mid-crawl
+    assert calls["prefilter"] == bloom_waves
+    assert calls["build"] == 1 + folds  # one build from seen, then folds
+
+
 def test_fused_equals_staged(spark, corpus_small):
     """scrape_resolve_children (one Arrow pass) must emit exactly what the
     staged scrape_edges → resolve_children pipeline emits."""

@@ -39,15 +39,14 @@ def test_cache_roundtrip_and_unknown_host():
     assert not cache.allowed("http://a", "http://a/no/1")
     assert cache.allowed("http://a", "http://a/yes")
     assert cache.allowed("http://b", "http://b/no/1")  # no robots -> allowed
-    state = cache.to_bodies_state()
-    back = RobotsCache.from_state(state)
-    assert not back.allowed("http://a", "http://a/no/1")
 
 
 def test_robots_parity_engine_vs_simulator(spark):
     """With respect_robots on, engine and simulator agree on visit order
-    and seen set — and both skip the disallowed subtrees."""
-    from wcm_spark.corpus import corpus_rows, seed_urls
+    and seen set — and both skip the disallowed subtrees. One seed is a
+    disallowed page: both drop it without marking its digest, whether the
+    seeds come as a list or as a DataFrame."""
+    from wcm_spark.corpus import corpus_rows, page_url, seed_urls
     from wcm_spark.crawlcore import CorpusPage, CrawlSimulator
     from wcm_spark.scheduler import CrawlConfig, Crawler
     from wcm_spark.urlkit import host_key
@@ -67,8 +66,12 @@ def test_robots_parity_engine_vs_simulator(spark):
         if u.endswith("/robots.txt") and p.body
     }
     assert bodies, "corpus must include robots.txt sites"
-    sim = CrawlSimulator(corpus=pages, robots=RobotsCache(bodies, agent="wcm-spark"))
-    for u in seed_urls(3):
+    robots = RobotsCache(bodies, agent="wcm-spark")
+    denied = page_url(1, 7)  # site1's robots.txt disallows its last page
+    assert not robots.allowed(host_key(denied), denied)
+    seeds = [seed_urls(3)[0], denied, *seed_urls(3)[1:]]
+    sim = CrawlSimulator(corpus=pages, robots=robots)
+    for u in seeds:
         sim.enqueue(u)
     sim.crawl()
 
@@ -77,13 +80,15 @@ def test_robots_parity_engine_vs_simulator(spark):
         "url string, status int, content_type string, content_length bigint, body binary, redirect_to string",
     ).cache()
     cfg = CrawlConfig(expected_urls=10_000, use_bloom=False, respect_robots=True)
-    res = Crawler(spark, corpus_df, cfg).run(seed_urls(3))
-
-    got = [r["url"] for r in res.visits.filter("status is not null").orderBy("pos").collect()]
-    assert got == sim.visit_order
-    assert {r["digest"] for r in res.seen.collect()} == sim.seen
-    # disallowed subtree actually skipped (site1 is the robots site)
-    assert not any("/r/" in u and "site1" in u for u in got)
+    seed_df = spark.createDataFrame(list(enumerate(seeds)), "seed_order long, url string")
+    for seed_arg in (seeds, seed_df):
+        res = Crawler(spark, corpus_df, cfg).run(seed_arg)
+        got = [r["url"] for r in res.visits.filter("status is not null").orderBy("pos").collect()]
+        assert got == sim.visit_order
+        assert {r["digest"] for r in res.seen.collect()} == sim.seen
+        assert denied not in got
+        # disallowed subtree actually skipped (site1 is the robots site)
+        assert not any("/r/" in u and "site1" in u for u in got)
 
 
 def test_live_robots_fetch_and_gate(spark):
@@ -141,20 +146,21 @@ def test_live_robots_fetch_and_gate(spark):
         srv.shutdown()
 
 
-def test_bounded_robots_cache_spill_same_verdicts(spark):
-    """robots_cache_max_hosts bounds the driver-side body dict: overflow
-    bodies spill FIFO to a parquet side table the fetch-time gate joins,
-    so gating verdicts (and the visit set) are IDENTICAL to the
-    unbounded cache while driver memory stays at <= cap bodies. Two
-    hosts (127.0.0.1 / localhost), cap=1: fetching the second host's
-    robots evicts the first's body; a link to the first host's
-    disallowed path discovered AFTER the eviction must still be gated —
-    via the spill join, since the broadcast no longer has those rules."""
+def test_live_robots_table_gates_enqueue_under_cap(spark):
+    """Live mode keeps robots as one table, so once a host's robots.txt is
+    fetched, every later discovery on that host is gated at enqueue — a
+    disallowed URL never enters the frontier, never gets digest-marked and
+    never takes cap room. Two hosts (127.0.0.1 / localhost): wave 2 learns
+    localhost's rules, and localhost's b.html then links two disallowed
+    paths on the FIRST host ahead of an allowed one. With cap=1 the queue
+    has room for two newcomers that wave, so the allowed c.html is crawled
+    only if the disallowed links took no room."""
     import threading
     from collections import Counter
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
     from wcm_spark.scheduler import Crawler, CrawlConfig
+    from wcm_spark.urlkit import job_digest
 
     hits: Counter = Counter()
     lock = threading.Lock()
@@ -171,8 +177,8 @@ def test_bounded_robots_cache_spill_same_verdicts(spark):
                 body, ct = b"User-agent: *\nDisallow: /private/\n", "text/plain"
             elif self.path == "/index.html":
                 # wave 1 (127.0.0.1): one allowed same-host leaf, one
-                # disallowed same-host path (gated at enqueue — rules
-                # known), and the second host's entry page
+                # disallowed same-host path (its rules are already known),
+                # and the second host's entry page
                 body = (
                     f'<a href="/pub/a.html">a</a>'
                     f'<a href="/private/x.html">x</a>'
@@ -181,11 +187,12 @@ def test_bounded_robots_cache_spill_same_verdicts(spark):
                 )
                 ct = "text/html"
             elif self.path == "/pub/b.html":
-                # discovered in wave 2, AFTER 127.0.0.1's body is evicted:
-                # links back to the first host's disallowed path — only the
-                # spill join still knows those rules
+                # wave 2, after localhost's robots.txt joined the table:
+                # two disallowed first-host links, then an allowed one
                 body = (
                     f'<a href="http://127.0.0.1:{port}/private/w.html">w</a>'
+                    f'<a href="http://127.0.0.1:{port}/private/v.html">v</a>'
+                    f'<a href="http://127.0.0.1:{port}/pub/c.html">c</a>'
                     .encode()
                 )
                 ct = "text/html"
@@ -199,32 +206,31 @@ def test_bounded_robots_cache_spill_same_verdicts(spark):
 
     srv = ThreadingHTTPServer(("127.0.0.1", 0), H)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
-    base = f"http://127.0.0.1:{srv.server_address[1]}"
-
-    def crawl(cap):
+    port = srv.server_address[1]
+    base = f"http://127.0.0.1:{port}"
+    try:
         cfg = CrawlConfig(
             fetch_mode="http", use_bloom=False, expected_urls=100,
-            http_timeout=5.0, respect_robots=True, max_waves=6,
-            robots_cache_max_hosts=cap,
+            http_timeout=5.0, respect_robots=True, max_waves=6, cap=1,
         )
-        c = Crawler(spark, None, cfg)
-        res = c.run([f"{base}/index.html"])
-        return c, {r["request_url"] for r in res.visits.collect()}
-
-    try:
-        _, unbounded = crawl(None)
-        hits.clear()
-        c, bounded = crawl(1)
-        assert bounded == unbounded  # same verdicts, same visit set
-        assert len(c._robots_bodies) <= 1  # driver dict bounded
-        assert c._robots_spill_dir is not None  # eviction actually spilled
-        # disallowed paths never requested on either host, before or
-        # after the eviction
+        res = Crawler(spark, None, cfg).run([f"{base}/index.html"])
+        urls = {r["request_url"] for r in res.visits.collect()}
+        assert urls == {
+            f"{base}/index.html", f"{base}/pub/a.html",
+            f"http://localhost:{port}/pub/b.html", f"{base}/pub/c.html",
+        }
+        # disallowed paths never requested on either host
         assert not [k for k in hits if "/private/" in k]
-        # the late cross-host discovery exercised the spill path: the
-        # allowed leaf on the EVICTED host was fetched in a wave after
-        # its body left the broadcast
-        assert any(k.endswith("/pub/a.html") for k in hits)
+        assert hits[f"localhost:{port}/robots.txt"] == 1
+        # disallowed URLs found after their host's robots.txt was fetched
+        # are never digest-marked
+        seen = {r["digest"] for r in res.seen.collect()}
+        for path in ("x", "w", "v"):
+            assert job_digest(f"{base}/private/{path}.html", None, None) not in seen
+        # the frontier only ever held allowed URLs: a, b, then c, then
+        # nothing; no wave skipped a row at fetch time
+        assert [m["pending"] for m in res.metrics] == [2, 1, 0]
+        assert all(m["skipped"] == 0 for m in res.metrics)
     finally:
         srv.shutdown()
 
@@ -313,12 +319,6 @@ def test_crawl_delay_parse_and_state():
     assert cache.delay("http://b") == 0.0
     assert cache.delay(None) == 0.0
     assert cache.host_delays() == {"http://a": 1.5}
-    # delay survives the broadcast state roundtrip (and old states
-    # without a delays key still restore)
-    back = RobotsCache.from_state(cache.to_bodies_state())
-    assert back.host_delays() == {"http://a": 1.5}
-    legacy = {"agent": "wcm-spark", "rules": {"http://a": ((False, "/no"),)}}
-    assert RobotsCache.from_state(legacy).host_delays() == {}
 
 
 def test_live_crawl_delay_spaces_requests(spark):

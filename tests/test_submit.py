@@ -52,6 +52,22 @@ def test_crawl_under_stock_aqe_session(spark):
     assert res.fetched == base.fetched
 
 
+def test_sql_conf_extra_parsing(monkeypatch):
+    """WCM_SQL_CONF_EXTRA: keys and values are stripped, values keep any
+    '=', empty segments are ignored and a segment without '=' warns
+    instead of vanishing silently."""
+    from wcm_spark.session import recommended_sql_confs
+
+    monkeypatch.setenv(
+        "WCM_SQL_CONF_EXTRA", " spark.a = 1 ; bogus ;spark.b=x=y;; "
+    )
+    with pytest.warns(UserWarning, match="bogus"):
+        confs = recommended_sql_confs()
+    assert confs["spark.a"] == "1"
+    assert confs["spark.b"] == "x=y"
+    assert not [k for k in confs if "bogus" in k or k != k.strip()]
+
+
 @pytest.mark.skipif(
     shutil.which("spark-submit") is None
     and not os.path.exists("/opt/spark/bin/spark-submit"),

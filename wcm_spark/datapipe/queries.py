@@ -548,7 +548,7 @@ def _q_robots(d, sf):
     host_id % 3 == 1 serve _ROBOTS_BODY; the SQL hand-unrolls the
     longest-prefix evaluation (most-specific LIKE first — /doc/11
     disallow beats /doc/1 allow beats /doc/ disallow). The Spark side
-    runs the ENGINE's RobotsCache broadcast + pandas-UDF path instead
+    runs the ENGINE's robots-table join + pandas-UDF path instead
     (_robots_spark override), so the driver compare pins the real rule
     evaluator against an independent SQL restatement."""
     return f"""WITH {_frontier_cte(d, sf)},
@@ -567,38 +567,25 @@ FROM gated"""
 
 
 def _robots_spark(spark, sf_dir):
-    """Engine path for robots_gate: broadcast RobotsCache + the same
-    vectorized allowed() UDF the scheduler's gate uses
-    (scheduler.py::_robots_filter)."""
-    import pandas as pd
+    """Engine path for robots_gate: the robots(host_key, body) table and
+    the verdict UDF every scheduler robots gate runs
+    (robots.py::robots_verdict)."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import BooleanType
+
+    from ..robots import robots_verdict
 
     frontier = spark.sql(
         f"WITH {_frontier_cte('spark', sf_dir)} "
         "SELECT seq, url, host_id, host_key FROM frontier"
     )
-    from ..robots import RobotsCache
-
-    hosts = [
-        r["host_key"]
-        for r in frontier.select("host_id", "host_key").distinct().collect()
-        if r["host_id"] % 3 == 1
-    ]
-    bc = spark.sparkContext.broadcast(
-        RobotsCache({h: _ROBOTS_BODY for h in hosts}, agent="wcm-spark").to_bodies_state()
+    robots = (
+        frontier.filter(F.col("host_id") % 3 == 1)
+        .select("host_key", F.lit(_ROBOTS_BODY).cast("binary").alias("body"))
+        .distinct()
     )
-
-    @F.pandas_udf(BooleanType())
-    def allowed(host_keys, urls):
-        from ..robots import RobotsCache as RC
-
-        cache = RC.from_state(bc.value)
-        return pd.Series([cache.allowed(hk, u) for hk, u in zip(host_keys, urls)])
-
-    return frontier.select(
-        "seq", "url", allowed(F.col("host_key"), F.col("url")).alias("allowed")
-    )
+    return robots_verdict(
+        frontier.select("seq", "url", "host_key"), robots, "wcm-spark"
+    ).select("seq", "url", "allowed")
 
 
 @register("credentials_attach")
@@ -6437,7 +6424,7 @@ _SPARK_OVERRIDES = {
     "ann_ivfpq_adc": _ivfpq_spark,
     "ann_ivfpq_recall_at_k": _ivfpq_recall_spark,
     # engine-path overrides: the SQL builder is the oracle, the Spark
-    # side runs the engine's own operator (robots broadcast gate, F8
+    # side runs the engine's own operator (robots table gate, F8
     # credential dimension join)
     "robots_gate": _robots_spark,
     "frontier_priority_cut": _priority_cut_spark,

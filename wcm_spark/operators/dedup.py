@@ -35,6 +35,11 @@ __all__ = ["NumpyBloom", "CuckooFilter", "with_bloom_hashes", "build_bloom", "se
 _H1 = "__bh1"
 _H2 = "__bh2"
 
+# seen-set size (digests) up to which seen_anti_join broadcasts seen; past
+# it the bloom-prefiltered shuffle path runs, and only then does a crawl
+# need its bloom (~128MB of 32-char digests at 4M)
+ANTI_JOIN_BROADCAST_MAX = 4_000_000
+
 
 class NumpyBloom:
     """Vectorized bloom filter over uint64 double hashes."""
@@ -200,11 +205,12 @@ def seen_anti_join(
     bloom: NumpyBloom | None = None,
     digest_col: str = "digest",
     seen_count: int | None = None,
-    broadcast_threshold: int = 4_000_000,
+    broadcast_threshold: int | None = None,
 ) -> DataFrame:
     """Exact unseen-candidates: anti-join on digest, plan picked by scale.
 
-    - seen small enough (``seen_count`` <= threshold, ~128MB of digests):
+    - seen small enough (``seen_count`` <= ``broadcast_threshold``, default
+      ANTI_JOIN_BROADCAST_MAX):
       broadcast-hash anti-join — candidates never shuffle, the whole
       parse→dedup pipeline stays one stage.
     - otherwise: bloom-prefiltered shuffle anti-join — definite-negatives
@@ -212,6 +218,8 @@ def seen_anti_join(
     This mirrors what a 10^10-frontier deployment does: broadcast while the
     seen set fits, degrade to the bloom+shuffle path when it doesn't.
     """
+    if broadcast_threshold is None:
+        broadcast_threshold = ANTI_JOIN_BROADCAST_MAX
     if seen_count is not None and seen_count <= broadcast_threshold:
         return candidates.join(F.broadcast(seen), digest_col, "left_anti")
     if bloom is None:

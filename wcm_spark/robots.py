@@ -1,4 +1,4 @@
-"""robots.txt: parse + cached per-host rule evaluation.
+"""robots.txt: parse, per-host rule evaluation, and the crawl's one gate.
 
 The reference crawler has no robots support; the north rule
 (BASELINE.json:6) adds "robots.txt caching" alongside the reference's
@@ -8,19 +8,26 @@ token else ``*``), longest-path-prefix match wins, Allow beats Disallow
 on equal length, no rule ⇒ allowed. ``$`` end-anchor and ``*`` wildcards
 inside paths are supported.
 
-At scale the cache is a broadcast dimension table: one row per host
-(robots bodies are small and hosts ≪ URLs), parsed once on the driver,
-evaluated inside the fused scrape UDF batch — no extra fetches and no
-per-row Python stage.
+At scale the cache is a Spark table, ``robots(host_key, body)``: one row
+per host that serves a robots.txt (bodies are small and hosts ≪ URLs).
+:func:`robots_gate` left-joins frontier rows to it on ``host_key`` and
+evaluates one pandas UDF that parses each distinct body once per Arrow
+batch. The planner picks a broadcast or shuffle join from the table's
+real size; a host without a row is allowed. :class:`RobotsCache` is the
+driver-side dict form the pure-Python reference simulator uses.
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 from urllib.parse import urlsplit
 
-__all__ = ["RobotsRules", "parse_robots", "RobotsCache"]
+if TYPE_CHECKING:  # the rule evaluator stays importable without Spark
+    from pyspark.sql import DataFrame
+
+__all__ = ["RobotsRules", "parse_robots", "RobotsCache", "robots_verdict", "robots_gate"]
 
 
 @dataclass(frozen=True)
@@ -109,8 +116,20 @@ def parse_robots(body: str, agent: str = "wcm-spark") -> RobotsRules:
     return RobotsRules(tuple(groups[best_name]), delays.get(best_name))
 
 
+def _url_allowed(rules: RobotsRules, url: str) -> bool:
+    """Evaluate ``rules`` against the path (+ query) of ``url``."""
+    try:
+        parts = urlsplit(url)
+    except ValueError:
+        return True
+    path = parts.path or "/"
+    if parts.query:
+        path += "?" + parts.query
+    return rules.allowed(path)
+
+
 class RobotsCache:
-    """Per-host parsed-rule cache; broadcast-friendly (plain dict state)."""
+    """Per-host parsed-rule cache (driver-side dict form)."""
 
     def __init__(self, bodies: dict[str, str] | None = None, agent: str = "wcm-spark"):
         self.agent = agent
@@ -124,14 +143,7 @@ class RobotsCache:
         rules = self._rules.get(host_key)
         if rules is None:
             return True  # no robots.txt ⇒ allowed
-        try:
-            parts = urlsplit(url)
-            path = parts.path or "/"
-            if parts.query:
-                path += "?" + parts.query
-        except ValueError:
-            return True
-        return rules.allowed(path)
+        return _url_allowed(rules, url)
 
     def delay(self, host_key: str | None) -> float:
         """Matched-group Crawl-delay for the host (seconds; 0.0 = none)."""
@@ -142,30 +154,62 @@ class RobotsCache:
 
     def host_delays(self) -> dict[str, float]:
         """{host_key: crawl_delay} for hosts that declare one — the
-        broadcast-friendly politeness dimension the fetcher consumes."""
+        politeness dimension the fetcher consumes."""
         return {
             k: v.crawl_delay
             for k, v in self._rules.items()
             if v.crawl_delay
         }
 
-    def to_bodies_state(self) -> dict:
-        return {
-            "agent": self.agent,
-            "rules": {k: v.rules for k, v in self._rules.items()},
-            "delays": {
-                k: v.crawl_delay
-                for k, v in self._rules.items()
-                if v.crawl_delay is not None
-            },
-        }
 
-    @classmethod
-    def from_state(cls, state: dict) -> "RobotsCache":
-        out = cls(agent=state["agent"])
-        delays = state.get("delays", {})  # absent in pre-delay checkpoints
-        out._rules = {
-            k: RobotsRules(tuple(map(tuple, v)), delays.get(k))
-            for k, v in state["rules"].items()
-        }
-        return out
+def robots_verdict(
+    rows: DataFrame, robots: DataFrame, agent: str, out: str = "allowed"
+) -> DataFrame:
+    """``rows`` (with ``host_key`` and ``url``) plus a boolean ``out``
+    column: the verdict of the row's host robots.txt for its URL.
+
+    ``robots`` is the ``(host_key string, body binary)`` table, one row
+    per host; hosts without a row (no robots.txt) are allowed. The body
+    rides each row through a left join, and the UDF parses each distinct
+    body once per Arrow batch."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import BooleanType
+
+    cols = rows.columns
+
+    @F.pandas_udf(BooleanType())
+    def allowed(urls, bodies):
+        parsed: dict = {}
+        verdicts = []
+        for url, body in zip(urls, bodies):
+            # isinstance, not `is not None`: a null cell can surface as NaN
+            if not isinstance(body, bytes) or not isinstance(url, str):
+                verdicts.append(True)
+                continue
+            rules = parsed.get(body)
+            if rules is None:
+                rules = parsed[body] = parse_robots(
+                    body.decode("utf-8", errors="replace"), agent
+                )
+            verdicts.append(_url_allowed(rules, url))
+        return pd.Series(verdicts, dtype=bool)
+
+    dim = robots.select("host_key", F.col("body").alias("__robots_body"))
+    return (
+        rows.join(dim, "host_key", "left")
+        .withColumn(out, allowed(F.col("url"), F.col("__robots_body")))
+        .select(*cols, out)
+    )
+
+
+def robots_gate(rows: DataFrame, robots: DataFrame | None, agent: str) -> DataFrame:
+    """The rows of ``rows`` their host's robots.txt allows, same schema.
+    ``robots`` None means no host serves rules: every row passes."""
+    if robots is None:
+        return rows
+    return (
+        robots_verdict(rows, robots, agent, "__robots_ok")
+        .filter("__robots_ok")
+        .drop("__robots_ok")
+    )

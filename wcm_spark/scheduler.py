@@ -34,9 +34,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .functions.core import digest_col, host_key_udf, host_salt_col
+from .operators import dedup
 from .operators.dedup import NumpyBloom, build_bloom, seen_anti_join
 from .operators.scrape import scrape_resolve_children
 from .operators.seq import assign_seq
+from .robots import parse_robots, robots_gate
 from .store import TableStore  # noqa: F401 (re-exported)
 from .store import for_session as store_for_session
 
@@ -74,7 +76,8 @@ class CrawlConfig:
     containers: list | None = None         # P4 context scoping
     expected_urls: int = 1_000_000         # bloom sizing
     bloom_fpp: float = 0.01
-    use_bloom: bool = True
+    use_bloom: bool = True                 # bloom-prefilter the seen anti-join once seen
+                                           # outgrows dedup.ANTI_JOIN_BROADCAST_MAX
     checkpoint_dir: str | None = None      # TableStore root for durable commits
     commit_every: int = 1                  # waves between durable commits
     compact_every_commits: int | None = None  # store maintenance cadence: every N
@@ -85,16 +88,14 @@ class CrawlConfig:
     collect_images: bool = False           # S7 image+caption sink
     shuffle_every: int | None = None       # F5 seeded re-sequencing
     credentials: dict | None = None        # F8: host_key -> userinfo (UserAgent.pm:17-31)
-    respect_robots: bool = False           # north-rule robots.txt gate (off = reference parity)
+    respect_robots: bool = False           # north-rule robots.txt gate (off = reference parity):
+                                           # seeds and children are joined to the
+                                           # robots(host_key, body) table before they
+                                           # enter the frontier (a disallowed URL is
+                                           # never marked seen); http mode also gates
+                                           # each wave before the fetch, since a host's
+                                           # rules are learned when it first appears
     robots_agent: str = "wcm-spark"
-    robots_cache_max_hosts: int | None = None  # bound on robots BODIES held in the
-                                           # driver dict + broadcast (live http mode).
-                                           # None = unbounded. Overflow bodies spill
-                                           # FIFO to a parquet side table that the
-                                           # fetch-time gate left-joins, so gating
-                                           # verdicts are identical at any host count;
-                                           # declared Crawl-delays are retained in a
-                                           # separate (tiny) never-evicted dict
     min_delay_waves: int = 0               # F6 politeness budget: waves a host rests between fetches
     broadcast_seen_max: int = 4_000_000    # D2 in-UDF probe while the exact digest set fits a broadcast
     fetch_mode: str = "corpus"             # "corpus" (test/bench join) | "http" (live network fetch)
@@ -191,13 +192,12 @@ class Crawler:
             self._normalize_cred_key(k): v
             for k, v in (self.config.credentials or {}).items()
         }
-        self._robots_bc = None
-        self._robots_bodies: dict[str, str] = {}
+        # robots(host_key, body): the one table every robots gate joins.
+        # Corpus mode reads it from the corpus here; live mode appends the
+        # hosts each wave meets (_learn_robots). The driver keeps only the
+        # host keys already asked and the declared Crawl-delays.
+        self._robots: DataFrame | None = None
         self._robots_hosts: set[str] = set()
-        # bounded-cache spill state (live http mode, robots_cache_max_hosts):
-        # bodies evicted from the driver dict live in this parquet dir and
-        # re-attach to waves by join; delays are tiny and never evicted
-        self._robots_spill_dir: str | None = None
         self._robots_delays: dict[str, float] = {}
         # piggybacked driver state (maintained from the per-wave digest
         # collect while the exact seen mirror is alive; None = unknown):
@@ -206,53 +206,40 @@ class Crawler:
         self._pending_ui: int | None = None
         self._pending_nonhttp: int | None = None
         self._frontier_hosts: set[str] | None = None
-        if self.config.respect_robots:
-            if corpus is not None:
-                self._robots_bc = spark.sparkContext.broadcast(
-                    self._build_robots_cache().to_bodies_state()
-                )
-            elif self.config.fetch_mode != "http":
-                raise ValueError("respect_robots without a corpus needs http mode")
-            # http mode without a corpus: robots.txt is fetched live, per
-            # wave, for hosts newly entering the frontier (_refresh_robots)
+        if self.config.respect_robots and self.config.fetch_mode != "http":
+            self._set_robots(
+                corpus.filter(F.col("url").endswith("/robots.txt"))
+                .filter((F.col("status") == 200) & F.col("body").isNotNull())
+                .select(host_key_udf(F.col("url")).alias("host_key"), "body")
+                .dropDuplicates(["host_key"])
+            )
 
-    def _build_robots_cache(self):
-        """North-rule robots.txt caching: robots bodies are one small row
-        per host — collected once, parsed on the driver, broadcast as a
-        dimension to every executor. No per-URL robots fetches ever."""
-        from .functions.core import host_key_udf as _hk
-        from .robots import RobotsCache
+    def _set_robots(self, table: DataFrame) -> None:
+        """Swap in a new robots table. It is persisted and counted, so the
+        join planner sizes it from its real bytes: a broadcast join while
+        small, a shuffle join past the broadcast threshold. An empty table
+        is kept as None (every gate passes its rows through)."""
+        table = table.persist()
+        n = table.count()
+        if self._robots is not None:
+            self._robots.unpersist()
+        if not n:
+            table.unpersist()
+        self._robots = table if n else None
 
-        robots_rows = (
-            self.corpus.filter(F.col("url").endswith("/robots.txt"))
-            .filter(F.col("status") == 200)
-            .select(_hk(F.col("url")).alias("hk"), "body")
-            .collect()
-        )
-        bodies = {
-            r["hk"]: bytes(r["body"]).decode("utf-8", errors="replace")
-            for r in robots_rows
-            if r["hk"] is not None and r["body"] is not None
-        }
-        return RobotsCache(bodies, agent=self.config.robots_agent)
-
-    def _refresh_robots_and_gate(self, wave: DataFrame) -> DataFrame:
-        """Live robots (http mode, no corpus): fetch /robots.txt once per
-        NEW host entering the frontier, fold into the broadcast cache, and
-        gate the wave at FETCH time (a disallowed frontier row is dropped
-        before any socket opens — standard live-crawler behavior; corpus
-        mode gates at enqueue instead, where rules are known up front).
+    def _learn_robots(self, wave: DataFrame) -> None:
+        """Live mode: fetch /robots.txt once per host new to the frontier,
+        through the page fetcher (same agent, timeout and redirect budget),
+        and append the hosts that serve one to the robots table. Each body
+        is parsed once here, for its Crawl-delay.
 
         Scale shape: hosts ≪ URLs and only first-seen hosts fetch, so this
-        is a tiny distinct-collect + a handful of driver-side requests per
-        wave; the rule evaluation itself stays a broadcast dimension."""
-        cfg = self.config
-        if not cfg.respect_robots or cfg.fetch_mode != "http":
-            return wave
+        is a handful of driver-side requests per wave."""
         from concurrent.futures import ThreadPoolExecutor
 
-        from .robots import RobotsCache
+        from .sources.httpfetch import _fetch_one
 
+        cfg = self.config
         if self._frontier_hosts is not None:
             # tracked superset of the wave's hosts (piggybacked on the
             # digest collect) — no per-wave distinct-collect job; fetching
@@ -264,141 +251,33 @@ class Crawler:
                 for r in wave.select("host_key").distinct().collect()
                 if r["host_key"]
             } - self._robots_hosts
-        if hosts:
-            import urllib.request
+        if not hosts:
+            return
 
-            def grab(hk: str):
-                try:
-                    with urllib.request.urlopen(
-                        hk + "/robots.txt", timeout=cfg.http_timeout
-                    ) as resp:
-                        if resp.getcode() == 200:
-                            return hk, resp.read(1 << 20).decode(
-                                "utf-8", errors="replace"
-                            )
-                except Exception:
-                    pass
-                return hk, ""  # unreachable/missing robots ⇒ allow-all
-
-            with ThreadPoolExecutor(max_workers=8) as pool:
-                for hk, body in pool.map(grab, sorted(hosts)):
-                    self._robots_hosts.add(hk)
-                    if body:
-                        self._robots_bodies[hk] = body
-                        # retain declared Crawl-delays outside the bounded
-                        # body cache: a float per declaring host, so the
-                        # politeness dimension survives body eviction
-                        d = RobotsCache(
-                            {hk: body}, agent=cfg.robots_agent
-                        ).host_delays()
-                        self._robots_delays.update(d)
-            cap = cfg.robots_cache_max_hosts
-            if cap is not None and len(self._robots_bodies) > cap:
-                # §5 driver-memory bound: FIFO-evict oldest-fetched bodies
-                # (dict preserves insertion order) to a parquet side table;
-                # the gate below re-attaches them by join, so verdicts are
-                # identical to the unbounded cache at any host count
-                import tempfile
-
-                n_evict = len(self._robots_bodies) - cap
-                evicted = [
-                    (hk, self._robots_bodies.pop(hk))
-                    for hk in list(self._robots_bodies)[:n_evict]
-                ]
-                if self._robots_spill_dir is None:
-                    self._robots_spill_dir = tempfile.mkdtemp(
-                        prefix="wcm_robots_spill_"
-                    )
-                self.spark.createDataFrame(
-                    evicted, "host_key string, robots_body string"
-                ).write.mode("append").parquet(self._robots_spill_dir)
-            if self._robots_bc is not None:
-                self._robots_bc.unpersist()
-            self._robots_bc = self.spark.sparkContext.broadcast(
-                RobotsCache(
-                    dict(self._robots_bodies), agent=cfg.robots_agent
-                ).to_bodies_state()
+        def grab(hk: str):
+            got = _fetch_one(
+                hk + "/robots.txt", None, None, cfg.max_redirects,
+                cfg.http_timeout, cfg.robots_agent, 1 << 20,
             )
-        bc = self._robots_bc
-        if bc is None:
-            return wave
+            # unreachable/missing robots.txt ⇒ no row ⇒ allow-all
+            return hk, got[5] if got[2] == 200 else None
 
-        import pandas as pd
-
-        from pyspark.sql.types import BooleanType
-
-        if self._robots_spill_dir is not None:
-            # evicted hosts: rules ride the wave as a joined body column
-            # and parse per batch — the broadcast stays bounded. isinstance
-            # guards, not `is not None`: a null string cell can surface as
-            # NaN in some pandas versions, and evicted bodies are always
-            # non-empty strings.
-            agent = cfg.robots_agent
-            spill = self.spark.read.parquet(self._robots_spill_dir)
-
-            @F.pandas_udf(BooleanType())
-            def allowed_spill(host_keys, urls, bodies):
-                from .robots import RobotsCache
-
-                cache = RobotsCache.from_state(bc.value)
-                batch_bodies = {
-                    hk: b
-                    for hk, b in zip(host_keys, bodies)
-                    if isinstance(b, str)
-                }
-                spilled = RobotsCache(batch_bodies, agent=agent)
-                return pd.Series(
-                    [
-                        spilled.allowed(hk, u)
-                        if isinstance(b, str)
-                        else cache.allowed(hk, u)
-                        for hk, u, b in zip(host_keys, urls, bodies)
-                    ]
-                )
-
-            cols = wave.columns  # the using-column join moves host_key
-            return (                # first; restore the wave's exact schema
-                wave.join(spill, "host_key", "left")
-                .filter(
-                    allowed_spill(
-                        F.col("host_key"), F.col("url"), F.col("robots_body")
-                    )
-                )
-                .select(*cols)
+        rows = []
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            for hk, body in pool.map(grab, sorted(hosts)):
+                self._robots_hosts.add(hk)
+                if body:
+                    rows.append((hk, body))
+                    delay = parse_robots(
+                        body.decode("utf-8", errors="replace"), cfg.robots_agent
+                    ).crawl_delay
+                    if delay:
+                        self._robots_delays[hk] = delay
+        if rows:
+            new = self.spark.createDataFrame(rows, "host_key string, body binary")
+            self._set_robots(
+                new if self._robots is None else self._robots.unionByName(new)
             )
-
-        @F.pandas_udf(BooleanType())
-        def allowed(host_keys, urls):
-            from .robots import RobotsCache
-
-            cache = RobotsCache.from_state(bc.value)
-            return pd.Series(
-                [cache.allowed(hk, u) for hk, u in zip(host_keys, urls)]
-            )
-
-        return wave.filter(allowed(F.col("host_key"), F.col("url")))
-
-    def _robots_filter(self, children: DataFrame) -> DataFrame:
-        """Drop robots-disallowed candidates before they enter the frontier
-        (disallowed URLs never get digest-marked — like a cap drop)."""
-        if self._robots_bc is None:
-            return children
-        bc = self._robots_bc
-
-        import pandas as pd
-
-        from pyspark.sql.types import BooleanType
-
-        @F.pandas_udf(BooleanType())
-        def allowed(host_keys, urls):
-            from .robots import RobotsCache
-
-            cache = RobotsCache.from_state(bc.value)
-            return pd.Series(
-                [cache.allowed(hk, u) for hk, u in zip(host_keys, urls)]
-            )
-
-        return children.filter(allowed(F.col("host_key"), F.col("url")))
 
     # -- fetch ------------------------------------------------------------
 
@@ -560,19 +439,7 @@ class Crawler:
                     .dropDuplicates(["url"])
                 )
                 wave = wave.join(vdf, "url", "left")
-            host_delays = {}
-            if self._robots_bc is not None:
-                # robots Crawl-delay of the matched agent group raises the
-                # per-host request spacing above the global min_delay_sec
-                from .robots import RobotsCache
-
-                host_delays = RobotsCache.from_state(
-                    self._robots_bc.value
-                ).host_delays()
-            if self._robots_delays:
-                # delays retained across body eviction (bounded robots cache)
-                host_delays = {**host_delays, **self._robots_delays}
-            if self.config.min_delay_sec > 0 or host_delays:
+            if self.config.min_delay_sec > 0 or self._robots_delays:
                 # a host must not span partitions, or in-partition request
                 # spacing would not be globally polite for the wave
                 wave = wave.repartition(
@@ -586,7 +453,9 @@ class Crawler:
                 user_agent=self.config.robots_agent,
                 creds=dict(self._creds),
                 min_delay_sec=self.config.min_delay_sec,
-                host_delays=host_delays,
+                # robots Crawl-delay of the matched agent group raises the
+                # per-host request spacing above the global min_delay_sec
+                host_delays=self._robots_delays,
             )
         wave = self._with_credentials(wave)
         w = wave.join(self._closure, wave.url == self._closure.src, "left").select(
@@ -628,6 +497,19 @@ class Crawler:
         "params string, digest string, depth int, referrer_url string, "
         "literal_uri string, context string, context_kind string, retries int"
     )
+
+    def _allowed_seed_list(self, seeds: list) -> list:
+        """The list seeds the robots table allows, in order: one small
+        job, so the driver-side seed fast path below stays dense."""
+        from .urlkit import host_key as hk_fn
+
+        rows = self.spark.createDataFrame(
+            [(i, u, hk_fn(u)) for i, u in enumerate(seeds)],
+            "i long, url string, host_key string",
+        )
+        gated = robots_gate(rows, self._robots, self.config.robots_agent)
+        keep = {r["i"] for r in gated.select("i").collect()}
+        return [u for i, u in enumerate(seeds) if i in keep]
 
     def _seed_frontier(self, seeds) -> DataFrame:
         if isinstance(seeds, (list, tuple)):
@@ -701,6 +583,9 @@ class Crawler:
             .withColumn("host_key", host_key_udf(F.col("url")))
             .withColumn("host_salt", host_salt_col(F.col("host_key"), self.config.salts))
         )
+        # robots before the digest dedup: a disallowed seed is dropped
+        # without marking its digest (CrawlSimulator.enqueue)
+        df = robots_gate(df, self._robots, self.config.robots_agent)
         df = _dedup_min(df, "digest", ["seed_order"])
         # seed_order is dense [0, n) by construction (list seeds: the
         # enumerate above; DataFrame seeds: row_number - 1), so the
@@ -792,6 +677,9 @@ class Crawler:
 
     def run(self, seeds) -> CrawlResult:
         cfg = self.config
+        if isinstance(seeds, (list, tuple)) and self._robots is not None:
+            # DataFrame seeds are gated inside _seed_frontier
+            seeds = self._allowed_seed_list(seeds)
         pending = self._seed_frontier(seeds).localCheckpoint(eager=True)
         seen = pending.select("digest").localCheckpoint(eager=True)
         next_seq = pending.count()
@@ -819,19 +707,15 @@ class Crawler:
                 for r in pending.select("host_key").distinct().collect()
                 if r["host_key"]
             }
-        bloom = None
-        if cfg.use_bloom:
-            bloom = NumpyBloom.sized(cfg.expected_urls, cfg.bloom_fpp)
-            build_bloom(pending, bloom)
-        return self._loop(pending, seen, next_seq, start_wave=0, bloom=bloom)
+        return self._loop(pending, seen, next_seq, start_wave=0)
 
     @classmethod
     def resume(cls, spark: SparkSession, corpus: DataFrame, config: CrawlConfig) -> "CrawlResult":
         """Continue a crawl from the last committed wave in checkpoint_dir.
 
         Restores frontier/seen/next_seq from the TableStore snapshots the
-        loop commits every ``commit_every`` waves; the bloom prefilter is
-        rebuilt from the restored seen table (one narrow pass)."""
+        loop commits every ``commit_every`` waves; the bloom prefilter, if
+        the seen set needs one, is rebuilt from the restored seen table."""
         assert config.checkpoint_dir, "resume needs checkpoint_dir"
         crawler = cls(spark, corpus, config)
         store = crawler.store
@@ -851,19 +735,14 @@ class Crawler:
                 for r in pending.select("host_key").distinct().collect()
                 if r["host_key"]
             }
-        bloom = None
-        if config.use_bloom:
-            bloom = NumpyBloom.sized(config.expected_urls, config.bloom_fpp)
-            build_bloom(seen, bloom)
         return crawler._loop(
             pending.localCheckpoint(eager=True),
             seen.localCheckpoint(eager=True),
             next_seq=int(meta.get("next_seq", 0)),
             start_wave=int(meta.get("wave", 0)),
-            bloom=bloom,
         )
 
-    def _loop(self, pending, seen, next_seq, start_wave, bloom) -> CrawlResult:
+    def _loop(self, pending, seen, next_seq, start_wave) -> CrawlResult:
         cfg = self.config
         spark = self.spark
         import os as _os
@@ -940,6 +819,10 @@ class Crawler:
         seen_set: set | None = None
         seen_bcs: list = []
         seen_delta: set = set()
+        # bloom prefilter of the anti-join, built on the first wave whose
+        # seen set is past dedup.ANTI_JOIN_BROADCAST_MAX (never while the
+        # exact mirror serves the probe in-UDF)
+        bloom: NumpyBloom | None = None
         if cfg.broadcast_seen_max and next_seq <= cfg.broadcast_seen_max:
             seen_set = {r["digest"] for r in seen.select("digest").collect()}
         else:
@@ -1020,11 +903,16 @@ class Crawler:
                 if self._pending_nonhttp is not None:
                     self._pending_nonhttp -= wave_count - gated_count
                 wave, wave_count = gated, gated_count
-            pre_robots = wave
-            wave = self._refresh_robots_and_gate(wave)
-            if wave is not pre_robots:
-                wave = wave.localCheckpoint(eager=True)
-                wave_count = wave.count()
+            if cfg.respect_robots and cfg.fetch_mode == "http":
+                # live robots: a host's rules are learned when it first
+                # appears, so rows enqueued before that are gated here,
+                # before any socket opens
+                self._learn_robots(wave)
+                if self._robots is not None:
+                    wave = robots_gate(
+                        wave, self._robots, cfg.robots_agent
+                    ).localCheckpoint(eager=True)
+                    wave_count = wave.count()
             fetched = self._fetch_wave(wave)
             if cfg.fetch_mode == "http":
                 fetched = fetched.localCheckpoint(eager=True)
@@ -1115,7 +1003,8 @@ class Crawler:
                 handlers=cfg.html_handlers,
                 redundancy=cfg.redundancy,
             )
-            children = self._robots_filter(children)
+            # enqueue gate: disallowed children never get digest-marked
+            children = robots_gate(children, self._robots, cfg.robots_agent)
             if cfg.url_filter_expr:
                 # before the digest collect: a denied child never marks
                 # seen, exactly like a user who never calls enqueue
@@ -1124,6 +1013,14 @@ class Crawler:
             # (broadcast while seen fits) leaves the window dedup sorting
             # only the unseen sliver instead of every extracted edge
             if not seen_bcs:
+                if (
+                    cfg.use_bloom and bloom is None
+                    and next_seq > dedup.ANTI_JOIN_BROADCAST_MAX
+                ):
+                    # first wave whose anti-join takes the bloom path: build
+                    # from seen once; later waves fold in their fresh digests
+                    bloom = NumpyBloom.sized(cfg.expected_urls, cfg.bloom_fpp)
+                    build_bloom(seen, bloom)
                 fresh = seen_anti_join(children, seen, bloom, seen_count=next_seq)  # D2
             else:
                 fresh = children  # probe already applied in-UDF, exactly
@@ -1324,7 +1221,6 @@ class Crawler:
                     cached_exchange.unpersist()
             _tr("assign_seq+final_ckpt")
             next_seq += enq_count
-            digests_collected = False
             if seen_set is not None and enq_count:
                 if len(seen_set) + enq_count > cfg.broadcast_seen_max:
                     # outgrown: bloom+anti-join from here on; the trackers
@@ -1339,11 +1235,9 @@ class Crawler:
                 else:
                     # ONE driver collect per wave carries everything the
                     # loop needs from the fresh rows: digests (exact seen
-                    # mirror + next delta broadcast), the bloom base hashes
-                    # (JVM xxhash64 — the driver updates the filter with no
-                    # separate build job), the userinfo-carrier flag
-                    # (credential-harvest gate) and, in live-robots mode,
-                    # host keys (robots-refresh gate).
+                    # mirror + next delta broadcast), the userinfo-carrier
+                    # flag (credential-harvest gate) and, in live-robots
+                    # mode, host keys (robots-refresh gate).
                     sel = [
                         F.col("digest"),
                         F.col("url").rlike(UI_PAT).alias("__ui"),
@@ -1354,13 +1248,6 @@ class Crawler:
                     )
                     if track_nonhttp:
                         sel.append((~F.col("url").rlike(HTTP_PAT)).alias("__nh"))
-                    if bloom is not None:
-                        sel += [
-                            F.xxhash64(F.col("digest")).alias("__h1"),
-                            F.xxhash64(
-                                F.col("digest"), F.lit("wcm-bloom-salt")
-                            ).alias("__h2"),
-                        ]
                     track_hosts = self._frontier_hosts is not None
                     if track_hosts:
                         sel.append(F.col("host_key"))
@@ -1369,7 +1256,6 @@ class Crawler:
                     # the row-Row collect at 100k+ fresh digests/wave) and
                     # the tracker folds become vector ops
                     pdf = enqueue.select(*sel).toPandas()
-                    digests_collected = True
                     fresh_digests = pdf["digest"].tolist()
                     seen_set.update(fresh_digests)
                     seen_delta.update(fresh_digests)
@@ -1378,13 +1264,6 @@ class Crawler:
                         self._pending_ui += n_ui
                     if track_nonhttp:
                         self._pending_nonhttp += int(pdf["__nh"].sum())
-                    if bloom is not None and len(pdf):
-                        import numpy as np
-
-                        bloom.add(
-                            pdf["__h1"].to_numpy(dtype=np.int64),
-                            pdf["__h2"].to_numpy(dtype=np.int64),
-                        )
                     if track_hosts:
                         self._frontier_hosts.update(
                             h for h in pdf["host_key"] if h
@@ -1425,9 +1304,7 @@ class Crawler:
             # (seed checkpoint + per-wave enqueue checkpoints): unioning is
             # plan-only, so the old per-wave O(total-seen) re-checkpoint is
             # gone; the broadcast anti-join just scans the pieces.
-            if bloom is not None and enq_count and not digests_collected:
-                # only when the exact-mirror collect didn't already fold
-                # the fresh hashes in driver-side
+            if bloom is not None and enq_count:
                 build_bloom(enqueue.select("digest"), bloom)
             _tr("pending_seen_update")
             if not no_caps:

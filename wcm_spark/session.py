@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -39,14 +40,25 @@ def recommended_sql_confs() -> dict[str, str]:
             "WCM_EXCLUDED_OPT_RULES",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         ),
-        # generic conf escape hatch for A/B experiments and site tuning:
-        # semicolon-separated key=value pairs, applied last
-        **dict(
-            kv.split("=", 1)
-            for kv in os.environ.get("WCM_SQL_CONF_EXTRA", "").split(";")
-            if "=" in kv
-        ),
+        **_conf_extra(),
     }
+
+
+def _conf_extra() -> dict[str, str]:
+    """WCM_SQL_CONF_EXTRA, the generic conf escape hatch for A/B
+    experiments and site tuning: semicolon-separated key=value pairs,
+    applied last. Keys and values are stripped; a segment without ``=``
+    is skipped with a warning."""
+    out = {}
+    for seg in os.environ.get("WCM_SQL_CONF_EXTRA", "").split(";"):
+        if not seg.strip():
+            continue
+        key, eq, value = seg.partition("=")
+        if not eq or not key.strip():
+            warnings.warn(f"WCM_SQL_CONF_EXTRA: ignoring {seg.strip()!r} (not key=value)")
+            continue
+        out[key.strip()] = value.strip()
+    return out
 
 
 def _warm_python_workers(spark: SparkSession, cpus: int) -> None:
@@ -82,8 +94,8 @@ def get_spark(
 ) -> SparkSession:
     """local[k] session tuned for the iterative crawl workload.
 
-    AQE stays on (runtime coalescing + skew-join splitting are part of the
-    skew story); Arrow is mandatory for every pandas UDF in the engine;
+    SQL confs come from recommended_sql_confs (AQE off unless WCM_AQE
+    turns it on; Arrow is mandatory for every pandas UDF in the engine);
     shuffle partitions default to the core count — at cluster scale these
     come from spark-submit conf instead.
     """

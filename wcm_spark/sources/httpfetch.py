@@ -22,6 +22,7 @@ pool saturates a link just as well for crawl-sized payloads.
 from __future__ import annotations
 
 import base64
+import http.client
 import urllib.error
 import urllib.parse
 import urllib.request
@@ -112,7 +113,7 @@ def _fetch_one(
             resp = opener.open(req, timeout=timeout)
         except urllib.error.HTTPError as e:
             resp = e  # HTTPError doubles as a response object
-        except (urllib.error.URLError, OSError, ValueError):
+        except (urllib.error.URLError, OSError, ValueError, http.client.HTTPException):
             return cur, _layout(history), None, None, None, None, None
         status = resp.getcode()
         if status == 304:
@@ -141,7 +142,7 @@ def _fetch_one(
                 continue
         try:
             raw = resp.read(max_body)
-        except (OSError, ValueError):
+        except (OSError, ValueError, http.client.HTTPException):
             return cur, _layout(history), None, None, None, None, None
         ct = resp.headers.get("Content-Type")
         cl = resp.headers.get("Content-Length")
@@ -200,8 +201,8 @@ def http_fetch_wave(
     ``min_delay_sec`` is the UserAgent-throttling analog in wall-clock
     time: requests to the SAME host are serialized with that spacing
     while different hosts still fetch in parallel. ``host_delays``
-    ({host_key: seconds}, e.g. from robots.txt Crawl-delay via
-    RobotsCache.host_delays) raises the spacing PER HOST — the
+    ({host_key: seconds}, e.g. the robots.txt Crawl-delays the
+    scheduler parses as it learns each host's rules) raises the spacing PER HOST — the
     effective gap is max(min_delay_sec, host_delays[host]). The caller
     must repartition the wave by host_key first so a host never spans
     two partitions (the scheduler does this automatically) — then the
